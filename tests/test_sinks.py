@@ -1,18 +1,17 @@
-"""Sink behavior: partitioned layout + pruning, dynamic-partition
-overwrite idempotency, MERGE-emulation upsert, Delta gating."""
+"""Sink behavior: partitioned append layout + pruning, and the one
+commit path — plain parquet only appends; every row-replacing write goes
+through etl/versioned.py (tests/test_versioned.py)."""
 
 from __future__ import annotations
 
+import pathlib
 from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from us_stock_data_pipeline_spark.etl.sinks import (
-    merge_upsert,
-    overwrite_partitions,
-    try_delta_writer,
-    write_partitioned,
-)
+import us_stock_data_pipeline_spark
+from us_stock_data_pipeline_spark.etl import sinks
+from us_stock_data_pipeline_spark.etl.sinks import write_partitioned
 from us_stock_data_pipeline_spark.etl.sources import parquet_exists
 
 
@@ -34,34 +33,6 @@ def test_partitioned_write_layout_and_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "symbol" in plan.split("PartitionFilters")[1][:80]
 
 
-def test_overwrite_partitions_idempotent(spark, tmp_path):
-    path = str(tmp_path / "bars")
-    batch = _bars(spark, [("AAA", datetime(2024, 1, 5, 14, 30), 1.0)])
-    other = _bars(spark, [("BBB", datetime(2024, 1, 5, 14, 30), 2.0)])
-    write_partitioned(other, path)
-    overwrite_partitions(batch, path)
-    overwrite_partitions(batch, path)  # re-run: must not duplicate
-    back = spark.read.parquet(path)
-    assert back.count() == 2  # AAA once, BBB untouched
-    assert back.filter("symbol = 'AAA'").count() == 1
-
-
-def test_merge_upsert(spark, tmp_path):
-    path = str(tmp_path / "bars")
-    base = _bars(spark, [("AAA", datetime(2024, 1, 5, 14, 30), 1.0),
-                         ("AAA", datetime(2024, 1, 5, 14, 31), 2.0),
-                         ("BBB", datetime(2024, 1, 5, 14, 30), 3.0)])
-    merge_upsert(spark, base, path, key_cols=("symbol", "ts"))
-    # Update one row, insert one row; BBB's partition must be untouched.
-    upd = _bars(spark, [("AAA", datetime(2024, 1, 5, 14, 31), 9.0),
-                        ("AAA", datetime(2024, 1, 5, 14, 32), 4.0)])
-    merge_upsert(spark, upd, path, key_cols=("symbol", "ts"))
-    back = spark.read.parquet(path)
-    assert back.count() == 4
-    assert back.filter("symbol='AAA' AND minute(ts)=31").first().close == 9.0
-    assert back.filter("symbol='BBB'").count() == 1
-
-
 def test_parquet_exists_probe(spark, tmp_path):
     assert not parquet_exists(spark, str(tmp_path / "nope"))
     path = str(tmp_path / "yes")
@@ -69,32 +40,23 @@ def test_parquet_exists_probe(spark, tmp_path):
     assert parquet_exists(spark, path)
 
 
-def test_delta_gated(spark, tmp_path):
-    df = _bars(spark, [("AAA", datetime(2024, 1, 5), 1.0)])
-    # delta-spark is not in this image; the writer must decline, not raise.
-    assert try_delta_writer(df, str(tmp_path / "delta")) is False
+def test_one_commit_path():
+    """No module of the engine dynamic-overwrites partitions or writes
+    Delta, and the plain sink exposes only the append: a write that
+    replaces rows has nowhere to go but etl/versioned.py's atomic
+    manifest commit."""
+    pkg = pathlib.Path(us_stock_data_pipeline_spark.__file__).parent
+    offenders = [
+        f"{py.relative_to(pkg)}: {needle}"
+        for py in sorted(pkg.rglob("*.py"))
+        for needle in ("partitionOverwriteMode", 'format("delta")', "format('delta')")
+        if needle in py.read_text(encoding="utf-8")
+    ]
+    assert offenders == []
 
-
-def test_compact_partitions(spark, tmp_path):
-    from us_stock_data_pipeline_spark.etl.sinks import compact_partitions
-    import glob
-
-    path = str(tmp_path / "frag")
-    df = spark.createDataFrame(
-        [(i, "A" if i % 2 else "B", float(i)) for i in range(100)],
-        "event_id long, symbol string, value double",
-    )
-    # simulate accretion: 10 appends -> many small files per partition
-    for k in range(10):
-        df.filter(F.col("event_id") % 10 == k).write.mode("append").partitionBy(
-            "symbol"
-        ).parquet(path)
-    before_files = len(glob.glob(f"{path}/symbol=*/*.parquet"))
-    assert before_files >= 20
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-
-    n = compact_partitions(spark, path, ("symbol",), files_per_partition=1)
-    assert n == 100
-    after_files = len(glob.glob(f"{path}/symbol=*/*.parquet"))
-    assert after_files == 2  # one file per symbol partition
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
+    public = {
+        name
+        for name, obj in vars(sinks).items()
+        if not name.startswith("_") and getattr(obj, "__module__", None) == sinks.__name__
+    }
+    assert public == {"write_partitioned"}

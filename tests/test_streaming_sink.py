@@ -1,7 +1,8 @@
-"""Streaming -> partitioned-parquet upsert via foreachBatch: the
+"""Streaming -> versioned-table upsert via foreachBatch: the
 production write path the reference's blind Delta appends should have
 been (`ingest_1m_session.py:273-293` duplicates rows on re-run).
-Each micro-batch MERGEs on event_id, so replayed input is idempotent."""
+Each micro-batch MERGEs on event_id as one atomic versioned commit, so
+replayed input is idempotent."""
 
 from __future__ import annotations
 
@@ -10,7 +11,12 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from us_stock_data_pipeline_spark.etl.sinks import merge_upsert
+from us_stock_data_pipeline_spark.etl.versioned import (
+    current_version,
+    read_manifest,
+    read_versioned,
+    versioned_merge_upsert,
+)
 
 SCHEMA = T.StructType(
     [
@@ -43,7 +49,9 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     _write_batch(rows1, src, "b1.json")
 
     def upsert(batch_df, batch_id):
-        merge_upsert(spark, batch_df, out, key_cols=("event_id",), partition_cols=("symbol",))
+        versioned_merge_upsert(
+            spark, batch_df, out, key_cols=("event_id",), partition_cols=("symbol",)
+        )
 
     def run_stream():
         q = (
@@ -57,7 +65,7 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
         q.awaitTermination()
 
     run_stream()
-    got = {(r.event_id, r.value) for r in spark.read.parquet(out).collect()}
+    got = {(r.event_id, r.value) for r in read_versioned(spark, out).collect()}
     assert got == {(1, 1.0), (2, 2.0), (3, 3.0)}
 
     # batch 2: one replayed-but-updated key, one new key -> upsert, no dup
@@ -67,12 +75,13 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     ]
     _write_batch(rows2, src, "b2.json")
     run_stream()
-    df = spark.read.parquet(out)
+    df = read_versioned(spark, out)
     assert df.count() == 4  # no duplicates despite key-2 arriving twice
     got = {(r.event_id, r.value) for r in df.collect()}
     assert got == {(1, 1.0), (2, 20.0), (3, 3.0), (4, 4.0)}
-    # partition layout survives the rewrites
-    assert os.path.isdir(os.path.join(out, "symbol=A"))
+    # one atomic commit per run; partition layout survives the rewrites
+    assert current_version(spark, out) == 2
+    assert set(read_manifest(spark, out, 2)) == {"symbol=A", "symbol=B"}
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
@@ -133,11 +142,9 @@ def test_foreachbatch_upsert_across_two_batches(spark, tmp_path):
     batch via maxFilesPerTrigger) and assert the later batch's rows
     overwrite the earlier batch's state for shared keys while unshared
     keys survive — the cross-batch upsert contract the single-batch
-    oracle run can't exercise."""
+    oracle run can't exercise — and that each batch is exactly one
+    atomic commit."""
     import pandas as pd
-    from pyspark.sql import functions as F
-
-    from us_stock_data_pipeline_spark.etl.sinks import merge_upsert
 
     src = tmp_path / "stream_src"
     src.mkdir()
@@ -157,11 +164,14 @@ def test_foreachbatch_upsert_across_two_batches(spark, tmp_path):
 
     def upsert(batch, batch_id):
         batches.append(batch_id)
-        merge_upsert(batch.sparkSession, batch, out, key_cols=("k",), partition_cols=("bucket",))
+        versioned_merge_upsert(
+            batch.sparkSession, batch, out, key_cols=("k",), partition_cols=("bucket",)
+        )
 
     q = sdf.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
     q.awaitTermination()
 
     assert len(batches) == 2  # really two micro-batches
-    state = {r.k: (r.v, r.seq) for r in spark.read.parquet(out).collect()}
+    assert current_version(spark, out) == 2  # one atomic commit per batch
+    state = {r.k: (r.v, r.seq) for r in read_versioned(spark, out).collect()}
     assert state == {1: ("a", 1), 2: ("B", 2), 3: ("c", 2)}

@@ -6,8 +6,9 @@ Where the reference pages a REST API per symbol on the driver and appends
 blindly, this driver reads an already-landed newline-JSON directory (see
 sources.RestLanding for the fetcher contract), curates it in one
 distributed pass, labels sessions as a column (not three tables), applies
-per-symbol incremental watermarks, and writes partitioned parquet
-idempotently.
+per-symbol incremental watermarks, and appends partitioned parquet
+(an incremental load's watermark drops re-landed rows instead of
+duplicating them).
 
     python -m us_stock_data_pipeline_spark.etl.run \
         --landing /data/landing/source=massive --out /data/silver/bars \
@@ -103,7 +104,6 @@ def build_parser() -> argparse.ArgumentParser:
         default="session,symbol",
         help="comma-separated partition columns (default session,symbol)",
     )
-    p.add_argument("--mode", default="append", choices=["append", "overwrite"])
     return p
 
 
@@ -116,10 +116,12 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         silver = incremental_per_symbol(silver, existing)
 
     partition_cols = tuple(c for c in args.partition_by.split(",") if c)
-    # Empty-input guard (parity F3/F4, without the reference's
-    # `.rdd.isEmpty()` de-optimization): isEmpty stops at the first row,
-    # so it is NOT a full scan — it exists so an empty landing dir can
-    # never dynamic-overwrite real data away.
+    # Empty-input guard (parity F3/F4, the reference's emptiness checks,
+    # without its `.rdd.isEmpty()` de-optimization): isEmpty stops at the
+    # first row, so it is NOT a full scan. It is also load-bearing for the
+    # observed write below: after a write of an empty frame,
+    # `Observation.get` raises `java.lang.AssertionError` instead of
+    # returning a zero count.
     if silver.isEmpty():
         n = 0
     else:
@@ -129,7 +131,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         # 100 TB the difference is a full extra pass over the input.
         obs = Observation("ingest_metrics")
         observed = silver.observe(obs, F.count(F.lit(1)).alias("rows"))
-        write_partitioned(observed, args.out, partition_cols, mode=args.mode)
+        write_partitioned(observed, args.out, partition_cols)
         n = obs.get["rows"]
     return {
         "rows_written": n,

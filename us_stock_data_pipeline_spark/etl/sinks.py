@@ -1,16 +1,15 @@
-"""Partitioned, idempotent sinks.
+"""Partitioned parquet appends.
 
-Parity K1/K2 (`ingest_massive.py:155`, `ingest_1m_session.py:273-293`)
-plus the idempotency the reference lacks: its append-only writes
-duplicate rows on re-run (SURVEY §1.4). Delta Lake would give MERGE;
-its jars are not in this image, so upsert is emulated with
-anti-join + union (the standard parquet-era pattern) and Delta itself is
-gated behind an import-try.
+Parity K1/K2 (`ingest_massive.py:155`, `ingest_1m_session.py:273-293`):
+the reference appends bars blindly into Delta. Plain parquet here is for
+appends only; every write that replaces rows (MERGE, DELETE,
+compaction, restatement) commits through `etl/versioned.py`, whose
+manifest commit is one atomic rename, so readers never see a torn table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,138 +43,14 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = ("symbol",),
-    mode: str = "append",
-    files_per_partition: int = 1,
 ) -> None:
-    """Hive-partitioned parquet write with small-file control.
+    """Hive-partitioned parquet append, one file per partition value.
 
     The reference writes with no repartition ("WRITE (NO coalesce)",
     `ingest_massive.py:153-155`) — at scale every task then emits a file
     per partition value (tasks x partitions small files). Clustering by
     the partition columns first (see _layout_for_write) bounds files per
     partition while keeping the write spread across the cluster."""
-    _layout_for_write(df, partition_cols, files_per_partition).write.mode(
-        mode
-    ).partitionBy(*partition_cols).parquet(path)
-
-
-def overwrite_partitions(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("symbol",)) -> None:
-    """Idempotent re-ingest: dynamic partition overwrite replaces exactly
-    the partitions present in `df`, leaving others untouched — re-running
-    an ingest window is safe (the reference's blind append is not)."""
-    (
-        _layout_for_write(df, partition_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: tuple[str, ...],
-    partition_cols: tuple[str, ...] = ("symbol",),
-) -> None:
-    """MERGE emulation on plain parquet: existing rows whose key matches
-    an update are replaced; everything else is kept. Anti-join + union,
-    rewritten atomically per partition via dynamic overwrite.
-
-    With Delta available this is `DeltaTable.merge` (see try_delta_writer);
-    the dataflow (broadcast the small update keys, anti-join the big
-    side) is the same one Delta executes underneath."""
-    from us_stock_data_pipeline_spark.etl.sources import parquet_exists
-
-    if not parquet_exists(spark, path):
-        write_partitioned(updates, path, partition_cols, mode="overwrite")
-        return
-    existing = spark.read.parquet(path)
-    keys = updates.select(*key_cols).dropDuplicates()
-    keep = existing.join(F.broadcast(keys), list(key_cols), "left_anti")
-    merged = keep.select(*updates.columns).unionByName(updates)
-    # Only partitions touched by the updates are rewritten.
-    touched = updates.select(*partition_cols).dropDuplicates()
-    merged_touched = merged.join(F.broadcast(touched), list(partition_cols), "left_semi")
-    # Stage-then-swap: materialize the merged result to a sibling staging
-    # path FIRST, so the read of `existing` completes before anything at
-    # `path` is deleted — a failure during the merge computation leaves
-    # the target completely untouched. The final dynamic-overwrite commit
-    # is still not atomic on plain parquet (readers can observe a torn
-    # state mid-commit; a crash mid-commit needs the staging dir to
-    # recover from) — Delta/Iceberg's commit protocol is the real fix and
-    # try_delta_writer uses it when the jars exist.
-    staging = path.rstrip("/") + "_staging"
-    _layout_for_write(merged_touched, partition_cols).write.mode(
-        "overwrite"
-    ).partitionBy(*partition_cols).parquet(staging)
-    overwrite_partitions(spark.read.parquet(staging), path, partition_cols)
-    _rmtree_path(spark, staging)
-
-
-def _rmtree_path(spark: SparkSession, path: str) -> None:
-    """Delete a path via Hadoop's FileSystem API so it works on any
-    supported filesystem (local, HDFS, object stores), not just POSIX."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    fs.delete(p, True)
-
-
-def try_delta_writer(df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("symbol",)) -> bool:
-    """Delta append sink (parity K2: `ingest_1m_session.py:273-275`),
-    gated behind an import-try — delta-spark jars are not in this image.
-    Returns False when Delta is unavailable so callers fall back to
-    parquet."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    df.write.format("delta").mode("append").partitionBy(*partition_cols).save(path)
-    return True
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_cols: tuple[str, ...] = ("symbol",),
-    files_per_partition: int = 1,
-) -> int:
-    """Small-file compaction: rewrite each hive partition's many small
-    files into `files_per_partition` files, preserving rows exactly.
-
-    Streaming sinks and incremental appends accrete a file per
-    micro-batch/run; at 100 TB that is millions of KB-sized files whose
-    open/list overhead dwarfs the data. Compaction = read + dynamic
-    partition overwrite with a repartition on the partition columns —
-    run it as routine maintenance per partition, off the write path.
-    Stage-then-swap (as in merge_upsert) so the source read completes
-    before the target is touched. Returns the number of rows rewritten
-    (observed on the staging write itself — no separate count pass)."""
-    from pyspark.sql import Observation
-
-    df = spark.read.parquet(path)
-    obs = Observation("compact_rows")
-    staging = path.rstrip("/") + "_staging"
-    (
-        _layout_for_write(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
-            partition_cols,
-            files_per_partition,
-        )
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(staging)
-    )
-    n = obs.get["rows"]
-    (
-        _layout_for_write(spark.read.parquet(staging), partition_cols, files_per_partition)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-    _rmtree_path(spark, staging)
-    return n
+    _layout_for_write(df, partition_cols).write.mode("append").partitionBy(
+        *partition_cols
+    ).parquet(path)

@@ -41,10 +41,11 @@ Design (a minimal Iceberg/Delta-log hybrid):
   enabled writes record per-file **zone maps** in the manifest;
   `read_versioned(stat_filter=...)` skips files on them.
 
-This retires the torn-read gap `merge_upsert` (etl/sinks.py) documents:
-its dynamic-partition-overwrite commit deletes and rewrites partition
-directories in place, so a concurrent reader can list a half-swapped
-table. Here nothing under a committed version directory is ever mutated.
+This is the engine's one commit path for writes that replace rows
+(plain parquet in etl/sinks.py is append-only). A dynamic partition
+overwrite deletes and rewrites partition directories in place, so a
+concurrent reader can list a half-swapped table; here nothing under a
+committed version directory is ever mutated.
 """
 
 from __future__ import annotations

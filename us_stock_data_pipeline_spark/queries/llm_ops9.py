@@ -239,7 +239,7 @@ def etl_cdc_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the row_number window; at 100 TB the changelog is
     time-partitioned so the window reads one partition's worth per
     apply cycle, and the same plan runs incrementally under
-    foreachBatch (stream_foreachbatch_upsert is the streaming twin)."""
+    foreachBatch (stream_versioned_upsert is the streaming twin)."""
     ev = load_table(spark, sf_dir, "events")
     op = (
         F.when(F.col("event_id") % 5 == 0, "D")

@@ -47,7 +47,7 @@ def etl_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(bytes_before / target) — so every output file lands within
     one input file of the target size and the assignment is a pure
     window expression, no bin-packing solver. This is the planning
-    half of what `etl/sinks.py`'s compacting writer executes, and
+    half of what `etl/versioned.py`'s `compact_table` executes, and
     the operational answer to the small-files problem
     `etl_input_file_skew` diagnoses: OPTIMIZE/rewrite jobs on
     lakehouse tables do exactly this per partition. Exact integer

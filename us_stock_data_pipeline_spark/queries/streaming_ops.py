@@ -498,113 +498,3 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("click_id", "purchase_id", "user_id", F.round("value", 4).alias("purchase_value"))
     out = _run_to_table(joined, spark, "append")
     return out.orderBy("click_id", "purchase_id")
-
-
-# --------------------------------------------------------------------------
-# foreachBatch -> MERGE upsert sink
-# --------------------------------------------------------------------------
-
-_FOREACH_UPSERT_ORACLE = """
-SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-       round(value, 4) AS last_value
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY user_id
-                               ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-)
-WHERE rn = 1
-ORDER BY user_id
-"""
-
-
-@register(
-    "stream_foreachbatch_upsert",
-    oracle=_FOREACH_UPSERT_ORACLE,
-    tags=("streaming", "sink", "merge"),
-)
-def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MERGE: foreachBatch bridges Structured Streaming to the
-    batch upsert sink — per micro-batch, compact the batch to its latest
-    row per key (max_by), then merge_upsert into the serving table keyed
-    on user_id. This is THE production pattern for streaming into a
-    keyed table (Delta/Iceberg MERGE inside foreachBatch); the final
-    table state equals the latest-row-per-key snapshot of everything
-    streamed, which is exactly what the oracle computes from the batch
-    fixture — so the streaming path gets a full value-hash check, not a
-    rows-only one. Batch-ordering note: within one batch max_by picks
-    the (ts, event_id) max; across batches the merge is CONDITIONAL on
-    the stored (ts, event_id) — a later batch carrying an older row (a
-    late replay, an out-of-order landing file) cannot overwrite a newer
-    stored row, so the final state is order-independent, not
-    last-writer-wins."""
-    import tempfile
-
-    from us_stock_data_pipeline_spark.etl.sinks import merge_upsert
-    from us_stock_data_pipeline_spark.etl.sources import parquet_exists
-
-    out = tempfile.mkdtemp(prefix="us_sdps_upsert_")
-    # multibatch source (one time-ordered file per micro-batch) so the
-    # stored-key conditional-merge branch genuinely executes: batch 2+
-    # sees parquet_exists(out) true and merges against stored state.
-    sdf = _events_stream_multibatch(spark, sf_dir, n_files=3).select(
-        "user_id", "event_id", "event_type", "ts", "value",
-        F.pmod("user_id", F.lit(8)).cast("int").alias("bucket"),
-    )
-
-    def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        key = F.struct(F.col("ts"), F.col("event_id"))
-        compact = batch.groupBy("user_id").agg(
-            F.max(key).alias("last_key"),
-            F.max_by("event_id", key).alias("last_event_id"),
-            F.max_by("event_type", key).alias("last_type"),
-            F.max_by("value", key).alias("last_value"),
-            F.max_by("bucket", key).alias("bucket"),
-        )
-        sess = batch.sparkSession
-        if parquet_exists(sess, out):
-            # Scale shape: the serving table is the big side — semi-join
-            # it down to this batch's keys (broadcasting the small batch
-            # key set), and only then broadcast the bounded result back
-            # against the batch. Never broadcast the serving table.
-            stored = (
-                sess.read.parquet(out)
-                .join(F.broadcast(compact.select("user_id")), "user_id", "left_semi")
-                .select("user_id", F.col("last_key").alias("stored_key"))
-            )
-            compact = (
-                compact.join(F.broadcast(stored), "user_id", "left")
-                .filter(
-                    F.col("stored_key").isNull()
-                    | (F.col("last_key") > F.col("stored_key"))
-                )
-                .drop("stored_key")
-            )
-            # every batch row older than stored state -> nothing to merge;
-            # writing an empty staging dir would make the follow-up read
-            # fail with 'Unable to infer schema'.
-            if not compact.take(1):
-                return
-        merge_upsert(
-            sess, compact, out, key_cols=("user_id",),
-            partition_cols=("bucket",),
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(upsert_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (
-        spark.read.parquet(out)
-        .select(
-            "user_id", "last_event_id", "last_type",
-            F.round("last_value", 4).alias("last_value"),
-        )
-        .orderBy("user_id")
-    )

@@ -103,7 +103,7 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Weighted sums are exact integers (cents x integer weight); the
     stream side keys state by window only. On a cluster the static
     table re-broadcasts per batch — the reason slowly-changing dims
-    at scale move to `stream_foreachbatch_upsert`-style refreshes."""
+    at scale move to `stream_versioned_upsert`-style refreshes."""
     ev = _events_stream(spark, sf_dir)
     weights = spark.createDataFrame(_WEIGHTS, "event_type string, weight long")
     enriched = ev.join(F.broadcast(weights), "event_type")

@@ -21,12 +21,10 @@ from us_stock_data_pipeline_spark.registry import register
 
 def _has_protobuf() -> bool:
     """transformWithStateInPandas drives its state protocol over
-    protobuf (pyspark/sql/streaming/proto/StateMessage_pb2). This
-    container ships no ``google.protobuf`` and installs are
-    prohibited, so the Spark-4 path is capability-probed exactly like
-    the Delta jars in etl/sinks.py:try_delta_writer — the moment the
-    environment grows protobuf, the real API runs (and the semantics
-    are identical either way; see the fallback note below)."""
+    protobuf (pyspark/sql/streaming/proto/StateMessage_pb2), so the
+    Spark-4 path is capability-probed by importing ``google.protobuf``:
+    where it imports, the real API runs (and the semantics are
+    identical either way; see the fallback note below)."""
     try:
         import google.protobuf  # noqa: F401
 

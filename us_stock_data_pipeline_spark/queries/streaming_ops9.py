@@ -39,6 +39,11 @@ ORDER BY user_id
     oracle=_VUP_ORACLE,
     tags=("streaming", "sink", "merge", "versioned"),
 )
+@register(
+    "stream_foreachbatch_upsert",
+    oracle=_VUP_ORACLE,
+    tags=("streaming", "sink", "merge"),
+)
 def stream_versioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE into the ATOMIC versioned table: foreachBatch
     compacts each micro-batch to its latest row per user, gates it
@@ -46,10 +51,10 @@ def stream_versioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite — order-independent final state), and commits it as one
     new table version; a reader resolving the table BETWEEN batches
     sees a complete committed snapshot, never a half-written
-    micro-batch — exactly what `stream_foreachbatch_upsert`'s plain
-    dynamic-overwrite sink cannot promise (its commit tears), and
-    exactly the Delta `foreachBatch + MERGE` production pattern
-    re-expressed on etl/versioned.py's rename-atomic manifests. The
+    micro-batch. This is the Delta `foreachBatch + MERGE` production
+    pattern re-expressed on etl/versioned.py's rename-atomic manifests,
+    and the engine's only streaming upsert sink: it is registered as
+    both `stream_versioned_upsert` and `stream_foreachbatch_upsert`. The
     version count after the run equals the number of non-empty
     micro-batches — each one audit-visible and time-travelable, so a
     bad batch rolls back by repointing, not reprocessing. Final state
